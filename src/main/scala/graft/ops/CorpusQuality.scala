@@ -272,11 +272,11 @@ object CorpusQuality {
     * p·ln(p/q) term rounds to DECIMAL(18,6) BEFORE any cross-engine
     * comparison/sum (the ln-ulp determinism contract, as in the unigram
     * LM score). */
-  def splitDrift(docs: DataFrame, bucketWidth: Int = 50, maxBucket: Int = 9)
+  def splitDrift(docs: DataFrame, bucketWidth: Int = 50, topBucket: Int = 9)
       : DataFrame = {
     val s = Sampling.withSplit(docs)
       .select(col("doc_id"), col("split"),
-        least((col("n_chars") / bucketWidth).cast("long"), lit(maxBucket.toLong))
+        least((col("n_chars") / bucketWidth).cast("long"), lit(topBucket.toLong))
           .as("bucket"))
       .filter(col("split").isin("train", "val"))
     val counts = s.groupBy("split", "bucket").agg(count(lit(1)).as("n"))

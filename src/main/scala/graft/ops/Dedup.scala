@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.expr.ArrayExprs.{jaccardSorted, minhashSignature}
+import graft.expr.ArrayExprs.minhashSignature
 
 /** Large-scale deduplication operators for training-data pipelines.
   *
@@ -78,89 +78,20 @@ object Dedup {
   /** MinHash-LSH candidate pairs: signatures banded into `bands` bands of
     * `rows` slots; docs sharing any band bucket become candidates and are
     * verified with exact shingle-set Jaccard. Returns (doc_a, doc_b,
-    * jaccard) with doc_a < doc_b.
-    *
-    * `maxBucket` is the degenerate-corpus guard for 100 TB runs: a bucket
-    * holding B docs emits B² candidate pairs, and a pathological corpus
-    * (boilerplate-heavy, near-constant pages) concentrates mass in few
-    * buckets. Capping skips buckets larger than `maxBucket` — a documented
-    * recall trade (members of a skipped bucket usually co-occur in other,
-    * smaller buckets of their 15 remaining bands). Default off: exact
-    * reference behavior, and what the dedupCorpus oracle reproduces.
-    *
-    * `starCap` (r16) is the closure/drop-decision-preserving alternative
-    * (the [[graft.ops.Neutral.minHashEdgesSkewSafe]] policy): oversized
-    * buckets emit hub-verified STAR candidates (bucket-min rep → member,
-    * O(size)) instead of being skipped; every candidate still pays exact
-    * Jaccard verification. Only member↔member pairs meeting EXCLUSIVELY
-    * inside over-cap buckets are traded for the hub edge. At most one of
-    * maxBucket/starCap may be set. */
+    * jaccard) with doc_a < doc_b. `starCap` applies the star skew policy
+    * to oversized buckets ([[Blocking]]); `None` (the default) enumerates
+    * every within-bucket pair. */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
-      maxBucket: Option[Int] = None,
       starCap: Option[Int] = None): DataFrame = {
     require(bands * rows == 64, "bands*rows must equal the 64-slot signature")
-    require(maxBucket.isEmpty || starCap.isEmpty,
-      "maxBucket (drop) and starCap (star) are alternative bucket policies")
-    import org.apache.spark.sql.expressions.Window
-    val sig = shingleTable(docs, textCol, shingleN)
-      .withColumn("sig", minhashSignature(col("hs")))
-      .select(col("doc_id"), col("hs"), col("sig"))
+    val hs = shingleTable(docs, textCol, shingleN)
     // one row per (doc, band): bucket key = hash of the band's slice
-    val banded0 = sig.select(
-      col("doc_id"), col("hs"),
-      posexplode(expr(
+    val banded = hs.withColumn("sig", minhashSignature(col("hs")))
+      .select(col("doc_id"), posexplode(expr(
         s"transform(sequence(0, ${bands - 1}), b -> xxhash64(b, slice(sig, b * $rows + 1, $rows)))"))
         .as(Seq("band", "bucket")))
-    val banded = maxBucket match {
-      case Some(m) =>
-        // window over the same (band, bucket) key the join shuffles on —
-        // the size count reuses that partitioning, no extra exchange
-        banded0
-          .withColumn("bsize",
-            count(lit(1)).over(Window.partitionBy("band", "bucket")))
-          .filter(col("bsize") <= m)
-          .drop("bsize")
-      case None => banded0
-    }
-    val cand = starCap match {
-      case Some(cap) =>
-        // candidates travel as narrow (doc_a, doc_b) here and the shingle
-        // arrays re-attach afterwards: star dedup must not carry `hs`
-        // through the union/distinct
-        val w = Window.partitionBy("band", "bucket")
-        val sized = banded0
-          .withColumn("bsize", count(lit(1)).over(w))
-          .withColumn("rep", min(col("doc_id")).over(w))
-        val small = sized.filter(col("bsize") <= cap)
-          .select("band", "bucket", "doc_id")
-        val pairsSmall = small.select(col("band"), col("bucket"),
-            col("doc_id").as("doc_a"))
-          .join(small.select(col("band"), col("bucket"),
-            col("doc_id").as("doc_b")), Seq("band", "bucket"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b")
-        val star = sized.filter(col("bsize") > cap &&
-            col("doc_id") =!= col("rep"))
-          .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-        pairsSmall.unionByName(star).distinct()
-          .join(sig.select(col("doc_id").as("doc_a"), col("hs").as("sh_a")),
-            Seq("doc_a"))
-          .join(sig.select(col("doc_id").as("doc_b"), col("hs").as("sh_b")),
-            Seq("doc_b"))
-      case None =>
-        val a = banded.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_a"), col("hs").as("sh_a"))
-        val b = banded.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_b"), col("hs").as("sh_b"))
-        a.join(b, Seq("band", "bucket"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b", "sh_a", "sh_b")
-          .distinct()
-    }
-    cand
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .select("doc_a", "doc_b", "jaccard")
+    Blocking.minHashPairs(banded, hs, starCap)
   }
 
   /** 64-bit SimHash: per-word xxhash64, signed bit-vote per bit position,
@@ -256,11 +187,7 @@ object Dedup {
       .filter(col("doc_a") =!= col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .select("doc_a", "doc_b", "jaccard")
+    Blocking.jaccardScored(cand, sh)
   }
 
   /** Exact n-gram Jaccard best-match per doc over the rarest-prefix

@@ -77,11 +77,6 @@ object Neutral {
 
   // ---------------------------------------------------------------- MinHash
 
-  /** MinHash-LSH candidate pairs with md5-seeded permutations — same
-    * banding pipeline as [[Dedup.minHashCandidates]] (one row per (doc,
-    * band), equi join on (band, bucket), exact-Jaccard verification), but
-    * every lane min is reproducible in SQL. One md5 per distinct shingle;
-    * the 64 lane permutations are integer multiply-adds. */
   /** (cached) md5 signature table: (doc_id, hs, sig). Cached because every
     * consumer fans out over it (banding sides + verify re-attach joins) —
     * uncached, the shingle + signature kernels would re-execute per branch
@@ -119,172 +114,45 @@ object Neutral {
           s"array_join(transform(slice(sig, b * $rows + 1, $rows), x -> cast(x as string)), ','))"))
         .as(Seq("band", "bucket")))
 
-  /** `maxBucket` is the degenerate-corpus guard (same trade as
-    * [[Dedup.minHashCandidates]]): a bucket holding B docs emits B²
-    * candidate pairs, and a boilerplate-heavy corpus concentrates mass in
-    * few buckets; capping skips oversized buckets — a documented recall
-    * trade (skipped members usually co-occur in other, smaller buckets of
-    * their remaining bands). Default off: the oracle reproduces the
-    * uncapped candidate set.
+  /** MinHash-LSH candidate pairs with md5-seeded permutations — same
+    * banding pipeline as [[Dedup.minHashCandidates]] (one row per (doc,
+    * band), equi join on (band, bucket), exact-Jaccard verification), but
+    * every lane min is reproducible in SQL. One md5 per distinct shingle;
+    * the 64 lane permutations are integer multiply-adds.
     *
-    * `starCap` (r16) is the closure-preserving alternative to the drop
-    * cap: oversized buckets emit hub-verified STAR candidates (bucket-min
-    * rep → member, O(size)) instead of being skipped — every candidate,
-    * pair or star, still pays the exact Jaccard verification, so emitted
-    * edges are never approximate; only member↔member pairs meeting
-    * EXCLUSIVELY inside over-cap buckets are traded for the hub edge (the
-    * [[minHashEdgesSkewSafe]] policy — component-equal on a genuine
-    * duplicate class, pinned by ScaleSpec). Component-level consumers
-    * ([[dedupCorpusClustered]], joint multimodal dedup — but NOT
-    * [[leakageSafeSplit]], whose contamination guarantee makes exactness
-    * the right default; see its doc) default to Some(256) since r16:
-    * real boilerplate corpora have
-    * the dominant-class shape the r15 sf1 sweep measured quadratic, and
-    * the pair-shaped driver fixtures never reach the cap, so oracle
-    * results are bit-identical. At most one of maxBucket/starCap. */
+    * `starCap` applies the star skew policy ([[Blocking]]) to oversized
+    * buckets. Component-level consumers ([[dedupCorpusClustered]], joint
+    * multimodal dedup — but NOT [[leakageSafeSplit]], whose contamination
+    * guarantee makes exactness the right default; see its doc) default
+    * to Some(256) since r16: real boilerplate corpora have the
+    * dominant-class shape the r15 sf1 sweep measured quadratic, and the
+    * pair-shaped driver fixtures never reach the cap, so oracle results
+    * are bit-identical. */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
-      maxBucket: Option[Int] = None,
       precomputedSig: Option[DataFrame] = None,
       starCap: Option[Int] = None): DataFrame = {
     require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    require(maxBucket.isEmpty || starCap.isEmpty,
-      "maxBucket (drop) and starCap (star) are alternative bucket policies")
     // precomputedSig: a sigTable already restricted to `docs` (signatures
     // are a pure function of text, so reuse is result-identical) — lets
     // composite pipelines skip re-hashing every shingle per stage
     val sh = precomputedSig.getOrElse(sigTable(docs, textCol, shingleN))
-    // candidate pairs dedup on narrow (doc_a, doc_b) keys before the
-    // shingle-hash arrays re-attach for exact scoring, so no array ever
-    // rides the bucket shuffle (the ngram pipeline's PPJoin shape)
-    val banded0 = bandedOf(sh, bands, rows)
-    val banded = maxBucket match {
-      case Some(cap) =>
-        // size window over the SAME (band, bucket) key the join shuffles
-        // on — the count reuses that partitioning, no extra exchange
-        import org.apache.spark.sql.expressions.Window
-        banded0
-          .withColumn("bsize",
-            count(lit(1)).over(Window.partitionBy("band", "bucket")))
-          .filter(col("bsize") <= cap)
-          .drop("bsize")
-      case None => banded0
-    }
-    val cand = starCap match {
-      case Some(cap) =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("band", "bucket")
-        val sized = banded0
-          .withColumn("bsize", count(lit(1)).over(w))
-          .withColumn("rep", min(col("doc_id")).over(w))
-        val small = sized.filter(col("bsize") <= cap)
-          .select("band", "bucket", "doc_id")
-        val pairsSmall = small.select(col("band"), col("bucket"),
-            col("doc_id").as("doc_a"))
-          .join(small.select(col("band"), col("bucket"),
-            col("doc_id").as("doc_b")), Seq("band", "bucket"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b")
-        // rep = min(doc_id) over the bucket, so doc_a < doc_b is canonical
-        val star = sized.filter(col("bsize") > cap &&
-            col("doc_id") =!= col("rep"))
-          .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-        pairsSmall.unionByName(star).distinct()
-      case None =>
-        banded.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
-          .join(banded.select(col("band"), col("bucket"), col("doc_id").as("doc_b")),
-            Seq("band", "bucket"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b")
-          .distinct()
-    }
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("sh_b")), Seq("doc_b"))
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .select("doc_a", "doc_b", "jaccard")
+    Blocking.minHashPairs(bandedOf(sh, bands, rows), sh, starCap)
   }
 
-  /** Skew-safe near-dup EDGES for closure under a DOMINANT duplicate
-    * class (r14 verdict #5 — the one scale hazard uniform fixtures never
-    * exercise). Buckets at or under `maxBucket` emit full verified pairs
-    * (exactly [[minHashCandidates]]'s behavior); OVERSIZED buckets emit
-    * hub-verified STAR edges instead: each member is verified against the
-    * bucket's min-doc_id representative only, O(size) per bucket instead
-    * of O(size²). A class owning half the corpus lands in the same
-    * buckets in every band — full pair enumeration there is ~n²/8
-    * verified pairs (measured: ScaleEvidence `skew` mode), while the star
-    * form emits n−1 edges that yield the IDENTICAL connected components
-    * for a genuine duplicate class (every member ~ the hub, so the hub
-    * links them transitively). The trade, documented like `maxBucket`'s
-    * drop: a pathological bucket mixing DISSIMILAR docs loses member↔
-    * member edges whose hub verification fails; `maxBucket=None`-style
-    * completeness is not claimed, component EQUALITY on duplicate-class
-    * skew is (pinned by ScaleSpec). Both small-bucket size/pair and
-    * big-bucket rep derivations reuse the (band, bucket) shuffle
-    * partitioning — one exchange feeds the size window, the rep window,
-    * and the self-join. Returns undirected verified (doc_a < doc_b)
-    * edges. */
-  def minHashEdgesSkewSafe(docs: DataFrame, textCol: String = "text",
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
-      maxBucket: Int = 64, minJaccard: Double = 0.8): DataFrame = {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    import org.apache.spark.sql.expressions.Window
-    val sh = sigTable(docs, textCol, shingleN)
-    val w = Window.partitionBy("band", "bucket")
-    val sized = bandedOf(sh, bands, rows)
-      .withColumn("bsize", count(lit(1)).over(w))
-      .withColumn("rep", min(col("doc_id")).over(w))
-    val small = sized.filter(col("bsize") <= maxBucket)
-      .select("band", "bucket", "doc_id")
-    val pairsSmall = small.select(col("band"), col("bucket"),
-        col("doc_id").as("doc_a"))
-      .join(small.select(col("band"), col("bucket"), col("doc_id").as("doc_b")),
-        Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    // star edges: rep = min(doc_id) over the bucket, so rep < member and
-    // the (doc_a < doc_b) orientation is already canonical
-    val star = sized.filter(col("bsize") > maxBucket &&
-        col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    val cand = pairsSmall.unionByName(star).distinct()
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("sh_b")), Seq("doc_b"))
-      .filter(jaccardSorted(col("sh_a"), col("sh_b")) >= minJaccard)
-      .select("doc_a", "doc_b")
-  }
-
-  /** DuckDB twin of [[minHashEdgesSkewSafe]]'s edge set over `docsRel`:
-    * CTE chain ending in `hits(doc_a, doc_b)` — compose with a recursive
-    * closure for component oracles. */
+  /** DuckDB twin of `minHashCandidates(starCap = Some(cap))` filtered at
+    * `minJaccard`, over `docsRel`: CTE chain ending in `hits(doc_a,
+    * doc_b)` — compose with a recursive closure for component oracles. */
   private[graft] def skewSafeEdgeCtes(docsRel: String, minJaccard: Double,
-      maxBucket: Int, shingleN: Int = 3, bands: Int = 16,
+      cap: Int, shingleN: Int = 3, bands: Int = 16,
       rows: Int = 4): String =
     s"""${bandedCtes(docsRel, "", shingleN, bands, rows)},
-       |bsz AS (
-       |  SELECT band, bucket, count(*) AS bsize, min(doc_id) AS rep
-       |  FROM banded GROUP BY band, bucket
-       |),
-       |cand AS (
-       |  SELECT DISTINCT doc_a, doc_b FROM (
-       |    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |    FROM banded a
-       |    JOIN bsz z ON a.band = z.band AND a.bucket = z.bucket
-       |    JOIN banded b ON b.band = a.band AND b.bucket = a.bucket
-       |    WHERE z.bsize <= $maxBucket AND a.doc_id < b.doc_id
-       |    UNION ALL
-       |    SELECT z.rep AS doc_a, b.doc_id AS doc_b
-       |    FROM banded b JOIN bsz z ON b.band = z.band AND b.bucket = z.bucket
-       |    WHERE z.bsize > $maxBucket AND b.doc_id <> z.rep
-       |  ) u
-       |),
+       |${Blocking.starCandidateCtes("banded", Seq("band", "bucket"), "doc_id", cap)},
        |hits AS (
-       |  SELECT c.doc_a, c.doc_b
+       |  SELECT c.a AS doc_a, c.b AS doc_b
        |  FROM cand c
-       |  JOIN shn sa ON sa.doc_id = c.doc_a
-       |  JOIN shn sb ON sb.doc_id = c.doc_b
+       |  JOIN shn sa ON sa.doc_id = c.a
+       |  JOIN shn sb ON sb.doc_id = c.b
        |  WHERE CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
        |          / len(list_distinct(sa.s || sb.s)) >= $minJaccard
        |)""".stripMargin
@@ -1289,52 +1157,6 @@ object Neutral {
        |           (a, b) -> a + b) >= 0
        |         THEN CAST(1 AS BIGINT) << bb ELSE CAST(0 AS BIGINT) END)) AS BIGINT)""".stripMargin
 
-  /** Sign-LSH candidate pairs over a `(t, bucket)`-exploded table, with
-    * the house star/cap skew policy (r16 verdict #1 — the last measured
-    * quadratic): buckets at or under `starCap` enumerate full pairs
-    * (exactly the uncapped behavior); OVERSIZED buckets emit hub →
-    * member STAR candidates only (hub = min vec_id of the bucket),
-    * O(size) per bucket instead of O(size²). Under fixed `nbits` the
-    * per-bucket occupancy grows ∝ n, so uncapped within-bucket pairs
-    * grow ∝ n² — measured rows-exponent 1.95–2.00 on the sf0.1→sf1
-    * decade (SCALE_SWEEP_r16all). The cap bounds candidates at
-    * ~`starCap`·occupied + n per table. The bucket-size window rides the
-    * SAME (t, bucket) key the self-join shuffles on, so sizing adds no
-    * extra exchange. Every candidate — pair or star — still pays the
-    * exact cosine verification downstream; the policy only trades
-    * member↔member pairs that meet EXCLUSIVELY inside over-cap buckets
-    * for the hub edge ([[minHashCandidates]]'s starCap contract; star ==
-    * full components on a genuine duplicate class, pinned by ScaleSpec). */
-  private[ops] def cosineCandidates(bucketed: DataFrame,
-      starCap: Option[Int]): DataFrame = starCap match {
-    case Some(cap) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("t", "bucket")
-      val sized = bucketed
-        .withColumn("bsize", count(lit(1)).over(w))
-        .withColumn("rep", min(col("vec_id")).over(w))
-      val small = sized.filter(col("bsize") <= cap)
-        .select("t", "bucket", "vec_id")
-      val pairsSmall = small.select(col("t"), col("bucket"),
-          col("vec_id").as("id_a"))
-        .join(small.select(col("t"), col("bucket"),
-          col("vec_id").as("id_b")), Seq("t", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-      // rep = min(vec_id) over the bucket, so id_a < id_b is canonical
-      val star = sized.filter(col("bsize") > cap &&
-          col("vec_id") =!= col("rep"))
-        .select(col("rep").as("id_a"), col("vec_id").as("id_b"))
-      pairsSmall.unionByName(star).distinct()
-    case None =>
-      bucketed.select(col("t"), col("bucket"), col("vec_id").as("id_a"))
-        .join(bucketed.select(col("t"), col("bucket"),
-          col("vec_id").as("id_b")), Seq("t", "bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-  }
-
   /** Sign-LSH depth for a corpus of `n` vectors: `2·log2(n) − 16` bits
     * (ceil), floored at `base` (so every driver-oracle scale — n ≤ 4096
     * — derives exactly the oracle's static 8) and capped at 30. This is
@@ -1386,7 +1208,8 @@ object Neutral {
     val bucketed = emb.select(col("vec_id"),
       posexplode(lshBuckets(col("embedding"), bits, tables))
         .as(Seq("t", "bucket")))
-    cosineCandidates(bucketed, starCap)
+    Blocking.candidatePairs(bucketed, Seq("t", "bucket"), "vec_id", starCap)
+      .toDF("id_a", "id_b")
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a")), Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b")), Seq("id_b"))
       .filter(Similarity.cosine("e_a", "e_b") >= minCos)
@@ -1422,7 +1245,8 @@ object Neutral {
       lshBuckets(col("embedding"), bits, tables).as("bks"))
     val bucketed = withB.select(col("vec_id"),
       posexplode(col("bks")).as(Seq("t", "bucket")))
-    val cand = cosineCandidates(bucketed, starCap)
+    val cand = Blocking.candidatePairs(bucketed, Seq("t", "bucket"),
+      "vec_id", starCap).toDF("id_a", "id_b")
     val pairs = cand
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a")), Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b")), Seq("id_b"))
@@ -1505,7 +1329,8 @@ object Neutral {
     val bucketed = emb.select(col("vec_id"),
       posexplode(lshBuckets(col("embedding"), bits, tables))
         .as(Seq("t", "bucket")))
-    val cand = cosineCandidates(bucketed, starCap)
+    val cand = Blocking.candidatePairs(bucketed, Seq("t", "bucket"),
+      "vec_id", starCap).toDF("id_a", "id_b")
     // scored once, consumed by the pair and doc aggregates
     val scored = Pins.track(cand
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a")),
@@ -1615,29 +1440,12 @@ object Neutral {
        |  SELECT vec_id, ts.t AS t, bks[ts.t + 1] AS bucket
        |  FROM bl, (SELECT unnest(generate_series(0, ${tables - 1})) AS t) ts
        |),
-       |bsz AS (
-       |  SELECT t, bucket, count(*) AS bsize, min(vec_id) AS rep
-       |  FROM bk GROUP BY t, bucket
-       |),
-       |cand AS (
-       |  SELECT DISTINCT id_a, id_b FROM (
-       |    SELECT a.vec_id AS id_a, b.vec_id AS id_b
-       |    FROM bk a
-       |    JOIN bsz z ON a.t = z.t AND a.bucket = z.bucket
-       |    JOIN bk b ON b.t = a.t AND b.bucket = a.bucket
-       |    WHERE z.bsize <= $cap AND a.vec_id < b.vec_id
-       |    UNION ALL
-       |    SELECT z.rep, b.vec_id
-       |    FROM bk b
-       |    JOIN bsz z ON b.t = z.t AND b.bucket = z.bucket
-       |    WHERE z.bsize > $cap AND b.vec_id <> z.rep
-       |  ) u
-       |),
+       |${Blocking.starCandidateCtes("bk", Seq("t", "bucket"), "vec_id", cap)},
        |pairs AS (
-       |  SELECT c.id_a, c.id_b
+       |  SELECT c.a AS id_a, c.b AS id_b
        |  FROM cand c
-       |  JOIN e ea ON ea.vec_id = c.id_a
-       |  JOIN e eb ON eb.vec_id = c.id_b
+       |  JOIN e ea ON ea.vec_id = c.a
+       |  JOIN e eb ON eb.vec_id = c.b
        |  WHERE list_cosine_similarity(ea.v, eb.v) >= $minCos
        |)""".stripMargin
 

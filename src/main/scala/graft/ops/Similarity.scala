@@ -526,10 +526,10 @@ object Similarity {
     * with bucket occupancy, never all-pairs. Pairs are deduped on narrow
     * (id, id) keys before embeddings are re-attached for scoring.
     *
-    * `starCap` (default 256, the house skew policy — [[Neutral]]'s
-    * cosineCandidates): under a FIXED bit width, bucket occupancy grows
-    * ∝ n, so uncapped within-bucket pairs grow ∝ n² (measured 1.95–2.00
-    * on the sf0.1→sf1 decade, r16); over-cap buckets emit hub-verified
+    * `starCap` (default 256, the house skew policy — [[Blocking]]):
+    * under a FIXED bit width, bucket occupancy grows ∝ n, so uncapped
+    * within-bucket pairs grow ∝ n² (measured 1.95–2.00 on the
+    * sf0.1→sf1 decade, r16); over-cap buckets emit hub-verified
     * star candidates instead, making `n_near` a documented lower bound
     * there (exact below the cap; `None` restores full enumeration).
     * `nbits = 0` (default) derives the depth from the corpus size
@@ -542,7 +542,8 @@ object Similarity {
     val bucketed = emb.select(col("vec_id"),
       posexplode(VecExprs.lshBuckets(col("embedding"), bits, tables))
         .as(Seq("t", "bucket")))
-    val cand = Neutral.cosineCandidates(bucketed, starCap)
+    val cand = Blocking.candidatePairs(bucketed, Seq("t", "bucket"),
+      "vec_id", starCap).toDF("id_a", "id_b")
     val pairs = cand
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a")), Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b")), Seq("id_b"))

@@ -476,8 +476,8 @@ object TextAnalysis {
     * are equi on the fingerprint hash. Pair volume per fingerprint is
     * df², so fingerprints appearing in more than `maxPostings` docs are
     * dropped before pairing — they are boilerplate with no discriminative
-    * value (MOSS does the same), and the cap bounds the worst bucket the
-    * way maxBucket does for MinHash bands. The fingerprint table is
+    * value (MOSS does the same), and the cap bounds the worst posting
+    * list's pair count. The fingerprint table is
     * cached: the postings explode and the per-doc sizes both consume it. */
   def winnowOverlapPairs(docs: DataFrame, textCol: String = "text",
       k: Int = 8, w: Int = 8, minShared: Int = 2,

@@ -32,8 +32,9 @@ object NorthStar {
     * buckets → verified Jaccard); per-doc candidate count. md5-seeded
     * permutations (graft.ops.Neutral) make the whole pipeline — lane mins,
     * band buckets, candidate set — reproducible in the DuckDB oracle; the
-    * xxhash64 kernel form (Dedup.minHashCandidates) stays the raw-
-    * throughput path with behavioral ScalaTest coverage. */
+    * xxhash64 kernel form (Dedup.minHashCandidates) shares the same
+    * blocking path ([[graft.ops.Blocking]]) with behavioral ScalaTest
+    * coverage. */
   val dedupMinHash = QueryDef(
     "q_ns_dedup_minhash",
     graft.ops.Neutral.minHashOracleSql(0.5)) { (s, d) =>
@@ -185,11 +186,11 @@ object NorthStar {
     * at pairwise Jaccard ≈ 0.96 and land in the same LSH buckets in
     * every band). Full pair enumeration there is ~n²/8 verified pairs —
     * the quadratic blow-up uniform fixtures never exercise (measured in
-    * ScaleEvidence `skew`); [[graft.ops.Neutral.minHashEdgesSkewSafe]]
-    * emits hub-verified STAR edges for oversized buckets instead, O(n)
-    * edges with identical closure on a genuine duplicate class. Output:
-    * per-doc component id. Oracle: the same size-gated edge semantics in
-    * SQL + recursive-CTE transitive closure. */
+    * ScaleEvidence `skew`); the star cap ([[graft.ops.Blocking]], here
+    * `starCap = Some(16)`) emits hub-verified STAR edges for oversized
+    * buckets instead, O(n) edges with identical closure on a genuine
+    * duplicate class. Output: per-doc component id. Oracle: the same
+    * size-gated edge semantics in SQL + recursive-CTE transitive closure. */
   val dedupSkewSafe = QueryDef(
     "q_ns_dedup_skew_safe",
     s"""WITH RECURSIVE skewed AS (
@@ -225,8 +226,9 @@ object NorthStar {
           concat(col("base_text"), lit(" zz"),
             (col("doc_id") % 5).cast("string")))
           .otherwise(col("text")).as("text"))
-    val edges = graft.ops.Neutral.minHashEdgesSkewSafe(skewed,
-      maxBucket = 16, minJaccard = 0.8)
+    val edges = graft.ops.Neutral.minHashCandidates(skewed, starCap = Some(16))
+      .filter(col("jaccard") >= 0.8)
+      .select("doc_a", "doc_b")
     val comp = graft.ops.Dedup.connectedComponents(edges)
     docs.select("doc_id")
       .join(comp, Seq("doc_id"), "left")

@@ -422,7 +422,7 @@ class NeutralSpec extends AnyFunSuite {
     assert(mismatch == 0, s"$mismatch docs with kernel/reference winnow mismatch")
   }
 
-  test("md5 minhash hot-bucket cap skips oversized buckets, keeps small ones") {
+  test("md5 minhash star cap pairs an oversized bucket through its hub, keeps small ones") {
     // 30 identical docs flood every (band, bucket) they touch; a distinct
     // near-dup pair lives in small buckets and must survive the cap
     val heavy = (0 until 30)
@@ -434,12 +434,14 @@ class NeutralSpec extends AnyFunSuite {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
     val capped = graft.ops.Neutral
-      .minHashCandidates(docs, maxBucket = Some(10))
+      .minHashCandidates(docs, starCap = Some(10))
       .filter(col("jaccard") >= 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(capped.contains((1L, 2L)), s"small-bucket pair lost: $capped")
-    assert(!capped.exists(p => p._1 >= 1000 && p._2 >= 1000),
-      s"oversized-bucket pairs should be skipped: $capped")
+    val flood = capped.filter(p => p._1 >= 1000 && p._2 >= 1000)
+    assert(flood.forall(_._1 == 1000L),
+      s"over-cap buckets must pair only through the hub (min id): $flood")
+    assert(flood.size == 29, s"hub must reach every other member: $flood")
     // uncapped finds the flood pairs (30*29/2 of them)
     val uncapped = graft.ops.Neutral.minHashCandidates(docs)
       .filter(col("jaccard") >= 0.5).count()

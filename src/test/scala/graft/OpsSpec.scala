@@ -52,7 +52,7 @@ class OpsSpec extends AnyFunSuite {
     assert(cands.contains((5L, 20005L)), s"missing exact pair in $cands")
   }
 
-  test("minhash hot-bucket cap skips oversized buckets, keeps small ones") {
+  test("minhash star cap pairs an oversized bucket through its hub, keeps small ones") {
     // 30 identical docs: their (band, bucket) groups all hold 30 members
     val heavy = (0 until 30)
       .map(i => (1000L + i, "alpha beta gamma delta epsilon zeta eta theta"))
@@ -60,15 +60,17 @@ class OpsSpec extends AnyFunSuite {
       (1L, "one two three four five six seven eight"),
       (2L, "one two three four five six seven nine"))
     val docs = (heavy ++ light).toDF("doc_id", "text")
-    val capped = Dedup.minHashCandidates(docs, maxBucket = Some(10))
+    val capped = Dedup.minHashCandidates(docs, starCap = Some(10))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(!capped.exists { case (a, b) => a >= 1000L && b >= 1000L },
-      "pairs inside the oversized bucket must be skipped")
+    val flood = capped.filter { case (a, b) => a >= 1000L && b >= 1000L }
+    assert(flood.forall(_._1 == 1000L),
+      s"over-cap buckets must pair only through the hub (min id): $flood")
+    assert(flood.size == 29, s"hub must reach every other member: $flood")
     assert(capped.contains((1L, 2L)), "small buckets must still pair")
-    // default (no cap) still finds the heavy group
+    // default (no cap) still sees the whole flood
     val uncapped = Dedup.minHashCandidates(docs)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(uncapped.exists { case (a, b) => a >= 1000L && b >= 1000L })
+    assert(uncapped.count { case (a, b) => a >= 1000L && b >= 1000L } == 30 * 29 / 2)
   }
 
   test("ngram jaccard best-match finds the planted duplicates") {

@@ -7,7 +7,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Analytics
-import graft.ops.Dedup
+import graft.ops.{Blocking, Dedup}
 import graft.streaming.StreamOps
 
 /** Property-based invariants (SURVEY §5.3): generated inputs, structural
@@ -260,6 +260,38 @@ class PropertySpec extends AnyFunSuite {
         assert(once.select("doc_id").as[Long].collect().sorted.toSeq ==
           twice.select("doc_id").as[Long].collect().sorted.toSeq)
       }
+    }
+  }
+
+  test("star-cap blocking: canonical distinct pairs, a subset of full enumeration, hub-linked") {
+    // a bucket of 1-40 distinct ids out of 0..119; each bucket gets its
+    // own (t, bucket) key, and an id may sit in several buckets
+    val bucketGen = Gen.choose(1, 40)
+      .flatMap(n => Gen.pick(n, 0L until 120L).map(_.toSeq))
+    val caseGen = for {
+      buckets <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, bucketGen))
+      cap <- Gen.choose(1, 40)
+    } yield (buckets, cap)
+    forSamples(caseGen, 4) { case (buckets, cap) =>
+      val bucketed = buckets.zipWithIndex.flatMap { case (ids, k) =>
+        ids.map(id => (k % 2, k.toLong, id))
+      }.toDF("t", "bucket", "vec_id")
+      def pairs(starCap: Option[Int]): Seq[(Long, Long)] =
+        Blocking.candidatePairs(bucketed, Seq("t", "bucket"), "vec_id", starCap)
+          .as[(Long, Long)].collect().toSeq
+      val full = pairs(None)
+      val capped = pairs(Some(cap))
+      for (ps <- Seq(full, capped)) {
+        assert(ps.distinct.size == ps.size, s"duplicate pairs: ${ps.diff(ps.distinct)}")
+        assert(ps.forall { case (a, b) => a < b },
+          s"non-canonical pairs: ${ps.filterNot { case (a, b) => a < b }}")
+      }
+      assert(pairs(Some(buckets.map(_.size).max)).toSet == full.toSet,
+        "a cap at the largest bucket must equal full enumeration")
+      assert(capped.toSet.subsetOf(full.toSet), "star pairs must be real pairs")
+      for (ids <- buckets if ids.size > cap; m <- ids if m != ids.min)
+        assert(capped.contains((ids.min, m)),
+          s"over-cap member $m not paired with its hub ${ids.min}")
     }
   }
 

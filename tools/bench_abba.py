@@ -19,7 +19,7 @@ Usage:
               combined {OUT_PREFIX}_abba.json
   SF_DIR      default /root/testdata/sf0.1
 
-Environment is forwarded: SPARK_GRAFT_CPUS (default 32),
+Environment is forwarded: SPARK_GRAFT_CPUS (default os.cpu_count()),
 SPARK_GRAFT_SHUFFLE_PARTITIONS (default cpus), SPARK_GRAFT_BENCH_ALL=1
 (default on — the headline is the full registry), SPARK_GRAFT_BENCH_REPS.
 
@@ -66,7 +66,7 @@ def bench_once(tree: str, out: str, sf_dir: str, env_extra: dict) -> dict:
     # first and masked it)
     out = os.path.abspath(out)
     env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     env.setdefault("SPARK_GRAFT_BENCH_ALL", "1")
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
     env["SPARK_GRAFT_BENCH_OUT"] = out
